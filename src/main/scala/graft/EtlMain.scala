@@ -9,9 +9,15 @@ import org.apache.spark.sql.functions.{current_date, lit}
   * Usage: EtlMain <csvDataDir> <outDir> [asOfDate yyyy-MM-dd]
   *
   * Reads every CSV layout under `csvDataDir`, harmonizes + validates,
-  * quarantines invalid rows to `outDir/invalid_records`, writes the
-  * warehouse table to `outDir/warehouse` (parquet, partitioned by COUNTRY),
-  * registers one temp view per country, and prints each view.
+  * registers one temp view per country, and prints each view. Outputs under
+  * `outDir`:
+  *  - `invalid_records/invalid_records_<yyyyMMdd_HHmmss>`: the quarantined
+  *    rows as CSV with their validation error, one directory per run with
+  *    quarantined rows;
+  *  - `warehouse`: the valid rows (parquet, partitioned by COUNTRY);
+  *  - `latest_by_customer`: each customer's latest consultation, ranked
+  *    over the whole warehouse (parquet, partitioned by COUNTRY); the
+  *    country views read it.
   */
 object EtlMain {
   def main(args: Array[String]): Unit = {

@@ -21,44 +21,58 @@ import org.apache.spark.sql.functions._
   *    (`view_generator.py:36-40`).
   *
   * Determinism: the reference's sort is ambiguous on `CONSUL_DT` ties; the
-  * rebuild appends stable tie-break keys (SURVEY.md §7.4.4) and takes the
-  * "as of" date as a parameter instead of `current_date()` so results are
-  * reproducible (§7.4.5). Pass `asOf = current_date()` for live parity.
+  * rebuild appends tie-break keys up to every view column, so the order is
+  * total (SURVEY.md §7.4.4), and takes the "as of" date as a parameter
+  * instead of `current_date()` so results are reproducible (§7.4.5). Pass
+  * `asOf = current_date()` for live parity.
   *
-  * Scale: the dedup is one hash-shuffle on `CUST_I` + per-partition sort —
-  * the single shuffle this pipeline needs. All derived columns ride the same
-  * projection (whole-stage codegen); per-country outputs are filters over one
-  * shared ranked plan, so N countries do not mean N shuffles.
+  * Shape: two composable pieces. [[latestPerCustomer]] is the W1 rank — one
+  * hash-shuffle on `CUST_I` plus a per-partition sort over the whole table.
+  * [[registerRankedViews]] registers the per-country views over rows that
+  * are already ranked: derived columns plus the country predicate, no
+  * window. `Pipeline.run` writes the rank once per load as a
+  * `COUNTRY`-partitioned table, so each view is a partition-pruned scan and
+  * N countries cost one shuffle per load instead of one per view query.
   */
 object CountryViews {
 
-  /** Deterministic tie-break extension of `ORDER BY CONSUL_DT DESC`. */
+  /** The view's warehouse columns, before the derived E4/E5 columns. */
+  private val baseColumns = Seq(
+    "CUST_I", "NAME", "OPEN_DT", "CONSUL_DT", "VAC_ID", "DR_NAME", "STATE",
+    "COUNTRY", "DOB", "FLAG")
+
+  /** `ORDER BY CONSUL_DT DESC` extended to a total order: after the stable
+    * tie-break keys come the remaining view columns, so tied rows that differ
+    * in DOB or COUNTRY resolve the same way under any partitioning. */
   private def dedupOrder: Seq[Column] = Seq(
     col("CONSUL_DT").desc_nulls_last,
-    col("OPEN_DT").desc_nulls_last,
-    col("VAC_ID").asc_nulls_last,
-    col("NAME").asc_nulls_last)
+    col("OPEN_DT").desc_nulls_last) ++
+    Seq("VAC_ID", "NAME", "DR_NAME", "STATE", "COUNTRY", "DOB", "FLAG")
+      .map(col(_).asc_nulls_last)
 
-  /** W1+E4+E5: the `RankedCustomers` CTE body (`view_generator.py:19-48`). */
-  def rankedCustomers(warehouse: DataFrame, asOf: Column = current_date()): DataFrame = {
+  /** W1: the `RowNum = 1` row of every customer (`view_generator.py:42-45`,
+    * `:63`), ranked over the WHOLE warehouse and projected to the view's
+    * warehouse columns. This is the one shuffle of the views. */
+  def latestPerCustomer(warehouse: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("CUST_I")).orderBy(dedupOrder: _*)
-    warehouse
-      .withColumn("AGE", year(asOf) - year(col("DOB")))
-      .withColumn("DAYS_SINCE_CONSUL_GT_30",
-        when(datediff(asOf, col("CONSUL_DT")) > 30, true).otherwise(false))
+    warehouse.select(baseColumns.map(col): _*)
       .withColumn("RowNum", row_number().over(w))
+      .filter(col("RowNum") === 1)
+      .drop("RowNum")
   }
 
-  private val viewColumns = Seq(
-    "CUST_I", "NAME", "OPEN_DT", "CONSUL_DT", "VAC_ID", "DR_NAME", "STATE",
-    "COUNTRY", "DOB", "FLAG", "AGE", "DAYS_SINCE_CONSUL_GT_30")
+  /** E4+E5 over already-ranked rows (`view_generator.py:33-40`), computed
+    * from `asOf` at query time. */
+  private def withDerived(latest: DataFrame, asOf: Column): DataFrame =
+    latest.select(baseColumns.map(col) ++ Seq(
+      (year(asOf) - year(col("DOB"))).as("AGE"),
+      when(datediff(asOf, col("CONSUL_DT")) > 30, true).otherwise(false)
+        .as("DAYS_SINCE_CONSUL_GT_30")): _*)
 
   /** Latest-consultation row per customer with derived columns — the view
     * body before the country predicate (`view_generator.py:49-63`). */
   def dedupedCustomers(warehouse: DataFrame, asOf: Column = current_date()): DataFrame =
-    rankedCustomers(warehouse, asOf)
-      .filter(col("RowNum") === 1)
-      .select(viewColumns.map(col): _*)
+    withDerived(latestPerCustomer(warehouse), asOf)
 
   /** P9: one country's view (`view_generator.py:64`) — filter AFTER rank. */
   def countryView(warehouse: DataFrame, country: String,
@@ -98,7 +112,10 @@ object CountryViews {
        |        ROW_NUMBER() OVER (
        |            PARTITION BY CUST_I
        |            ORDER BY CONSUL_DT DESC NULLS LAST, OPEN_DT DESC NULLS LAST,
-       |                     VAC_ID ASC NULLS LAST, NAME ASC NULLS LAST
+       |                     VAC_ID ASC NULLS LAST, NAME ASC NULLS LAST,
+       |                     DR_NAME ASC NULLS LAST, STATE ASC NULLS LAST,
+       |                     COUNTRY ASC NULLS LAST, DOB ASC NULLS LAST,
+       |                     FLAG ASC NULLS LAST
        |        ) AS RowNum
        |    FROM $warehouseTable
        |)
@@ -137,13 +154,21 @@ object CountryViews {
 
   /** S6+S7: register each country view as a temp view — the Spark-native
     * replacement for generating SQL text files and executing them remotely
-    * (`view_generator.py:17-72`, `main.py:107-139`). Views are lazy: the
-    * shared ranked plan evaluates only when a view is queried, mirroring the
-    * reference's views-not-tables design (README.md:89-98). */
+    * (`view_generator.py:17-72`, `main.py:107-139`). Views are lazy,
+    * mirroring the reference's views-not-tables design (README.md:89-98);
+    * each one re-ranks the whole warehouse when queried. */
   def registerCountryViews(spark: SparkSession, warehouse: DataFrame,
                            countries: Seq[String],
-                           asOf: Column = current_date()): Seq[String] = {
-    val deduped = dedupedCustomers(warehouse, asOf)
+                           asOf: Column = current_date()): Seq[String] =
+    registerRankedViews(latestPerCustomer(warehouse), countries, asOf)
+
+  /** S6+S7 over already-ranked rows (the output of [[latestPerCustomer]]):
+    * each view is the derived columns over `latest`, filtered to one
+    * country. Over a `COUNTRY`-partitioned file table the filter prunes the
+    * scan to that country's directory. */
+  def registerRankedViews(latest: DataFrame, countries: Seq[String],
+                          asOf: Column = current_date()): Seq[String] = {
+    val deduped = withDerived(latest, asOf)
     countries.sorted.map { c =>
       val name = viewName(c)
       deduped.filter(col("COUNTRY") === lit(c)).createOrReplaceTempView(name)

@@ -20,8 +20,8 @@ class PipelineSpec extends SparkSpec {
 
   private lazy val dataDir = resourcePath("vaccination")
   private lazy val outDir = java.nio.file.Files.createTempDirectory("graft-e2e").toString
-  private lazy val result =
-    Pipeline.run(spark, dataDir, outDir, asOf = lit("2026-08-12").cast("date"))
+  private def asOf = lit("2026-08-12").cast("date")
+  private lazy val result = Pipeline.run(spark, dataDir, outDir, asOf)
 
   test("harmonization: canonical schema, unmapped columns dropped") {
     val raw = Harmonizer.loadSourceData(spark, dataDir)
@@ -97,6 +97,24 @@ class PipelineSpec extends SparkSpec {
     assert(sameer.getAs[java.sql.Date]("DOB").toString == "1952-08-13") // month-first
     val sam = wh.filter(col("NAME") === "Sam").collect().head
     assert(sam.getAs[java.sql.Date]("OPEN_DT").toString == "2022-06-15") // "6152022"
+    // read back with the written schema: partition column last, as inference puts it
+    val written = Warehouse.toWarehouse(
+      Validator.validate(Harmonizer.loadSourceData(spark, dataDir)).validRecords).columns
+    assert(wh.columns.toSeq == written.filterNot(_ == "COUNTRY").toSeq :+ "COUNTRY")
+  }
+
+  test("numeric-looking country codes stay strings through warehouse and views") {
+    val in = java.nio.file.Files.createTempDirectory("graft-numeric-in")
+    java.nio.file.Files.copy(
+      java.nio.file.Paths.get(resourcePath("vaccination/IND (1) 1(in).csv")),
+      in.resolve("036_vaccinations.csv"))
+    val out = java.nio.file.Files.createTempDirectory("graft-numeric-out").toString
+    val r = Pipeline.run(spark, in.toString, out, asOf)
+    assert(r.warehouse.schema("COUNTRY").dataType.typeName == "string")
+    assert(r.countries == Seq("036")) // leading zero kept
+    assert(r.views == Seq("VIEW_036"))
+    assert(spark.table("VIEW_036").select("NAME").collect().map(_.getString(0)).sorted
+      .toSeq == Seq("Rahul", "Sameer", "Vikas"))
   }
 
   test("country views: dedup + AGE + stale flag semantics") {
@@ -118,6 +136,98 @@ class PipelineSpec extends SparkSpec {
     assert(cristina.getAs[Int]("AGE") == 28)
     // CONSUL_DT is null in all files → NULL→FALSE coercion
     assert(!cristina.getAs[Boolean]("DAYS_SINCE_CONSUL_GT_30"))
+  }
+
+  /** Every view `Pipeline.run` registered equals the view computed straight
+    * from the warehouse (rank, then country filter). */
+  private def assertViewsMatchWarehouse(r: Pipeline.Result): Unit = {
+    assert(r.views == r.countries.map(CountryViews.viewName))
+    for (c <- r.countries) {
+      val registered = spark.table(CountryViews.viewName(c))
+      val direct = CountryViews.countryView(r.warehouse, c, asOf)
+      assert(registered.columns.toSeq == direct.columns.toSeq, c)
+      assert(registered.orderBy("CUST_I").collect().map(_.toSeq).toSeq ==
+        direct.orderBy("CUST_I").collect().map(_.toSeq).toSeq, s"country $c")
+    }
+  }
+
+  test("registered views equal the views ranked over the warehouse") {
+    assertViewsMatchWarehouse(result)
+    // customers 1 and 2 consulted in both countries; the later consultation
+    // decides the one view each appears in
+    val in = java.nio.file.Files.createTempDirectory("graft-multi-in")
+    val header = "ID,Name,VaccinationType,VaccinationDate,Doctor Name," +
+      "State/Province,Country,Consultation Date,DOB,Postal Code"
+    java.nio.file.Files.writeString(in.resolve("GBR_a.csv"), Seq(header,
+      "1,Ann,ABC,01/05/2022,Dr A,London,GBR,03/01/2024,04/02/1990,E1",
+      "2,Ben,XYZ,02/06/2022,Dr B,Leeds,GBR,01/15/2024,05/03/1985,LS1",
+      "3,Cat,ABC,03/07/2022,Dr C,York,GBR,,,YO1").mkString("", "\n", "\n"))
+    java.nio.file.Files.writeString(in.resolve("CAN_b.csv"), Seq(header,
+      "1,Ann,ABC,01/05/2022,Dr D,Ontario,CAN,05/01/2024,04/02/1990,K1A",
+      "2,Ben,XYZ,02/06/2022,Dr E,Quebec,CAN,01/10/2024,05/03/1985,H2X",
+      "4,Dan,LMN,04/08/2022,Dr F,Alberta,CAN,02/02/2024,,T5J").mkString("", "\n", "\n"))
+    val out = java.nio.file.Files.createTempDirectory("graft-multi-out").toString
+    val r = Pipeline.run(spark, in.toString, out, asOf)
+    assert(r.validCount == 6)
+    assert(r.countries == Seq("CAN", "GBR"))
+    assertViewsMatchWarehouse(r)
+    def names(v: String) =
+      spark.table(v).orderBy("CUST_I").collect().map(_.getAs[String]("NAME")).toSeq
+    assert(names("VIEW_CAN") == Seq("Ann", "Dan"))
+    assert(names("VIEW_GBR") == Seq("Ben", "Cat"))
+  }
+
+  test("country views scan one COUNTRY partition of latest_by_customer, no window") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Window => WindowNode}
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.datasources.FilePartition
+    for (c <- result.countries) {
+      val qe = spark.table(CountryViews.viewName(c)).queryExecution
+      assert(qe.optimizedPlan.collectFirst { case w: WindowNode => w }.isEmpty, c)
+      val files = qe.sparkPlan.collect { case s: FileSourceScanExec => s }
+        .flatMap(_.inputRDD.partitions.toSeq)
+        .flatMap { case p: FilePartition => p.files.map(_.filePath.toString) }
+      assert(files.nonEmpty, c)
+      files.foreach(f => assert(f.contains(s"/latest_by_customer/COUNTRY=$c/"), f))
+    }
+  }
+
+  test("dedup order is total: tied rows give the same views under any partitioning") {
+    import spark.implicits._
+    // C1's rows tie on CONSUL_DT, OPEN_DT, VAC_ID and NAME but differ in
+    // COUNTRY and DOB (so AGE); C2's differ only in DOB
+    val rows = Seq(
+      ("C1", "A", "JPN", "1990-01-01"), ("C1", "A", "NZL", "1980-01-01"),
+      ("C1", "A", "NZL", "1985-01-01"), ("C2", "B", "JPN", null),
+      ("C2", "B", "JPN", "1970-01-01"))
+    def warehouse(rs: Seq[(String, String, String, String)], parts: Int) =
+      rs.toDF("CUST_I", "NAME", "COUNTRY", "DOB").repartition(parts)
+        .withColumn("DOB", col("DOB").cast("date"))
+        .withColumn("OPEN_DT", lit("2022-01-01").cast("date"))
+        .withColumn("CONSUL_DT", lit("2024-05-01").cast("date"))
+        .withColumn("VAC_ID", lit("V1"))
+        .withColumn("DR_NAME", lit(null).cast("string"))
+        .withColumn("STATE", lit(null).cast("string"))
+        .withColumn("FLAG", lit(null).cast("string"))
+    val tieAsOf = lit("2024-06-15").cast("date")
+    def views(rs: Seq[(String, String, String, String)], parts: Int) = {
+      val prev = spark.conf.get("spark.sql.shuffle.partitions")
+      spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
+      try Seq("JPN", "NZL").map(c =>
+        CountryViews.countryView(warehouse(rs, parts), c, tieAsOf)
+          .orderBy("CUST_I").collect().map(_.toSeq).toSeq)
+      finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    }
+    val one = views(rows, 1)
+    assert(views(rows.reverse, 7) == one)
+    // COUNTRY then DOB break the ties: C1 → JPN (born 1990), C2 → 1970
+    assert(one.head.map(r => (r(0), r(10))) == Seq(("C1", 34), ("C2", 54)))
+    assert(one(1).isEmpty)
+    // the SQL template breaks ties the same way
+    warehouse(rows.reverse, 7).createOrReplaceTempView("tied_wh")
+    spark.sql(CountryViews.viewSql("JPN", "tied_wh", "DATE'2024-06-15'"))
+    assert(spark.table("VIEW_JPN").orderBy("CUST_I").collect().map(_.toSeq).toSeq ==
+      one.head)
   }
 
   test("dedup keeps latest consultation per customer across countries") {
@@ -227,8 +337,8 @@ class PipelineSpec extends SparkSpec {
     for (c <- result.countries) {
       val fromSql = spark.sql(
         s"SELECT * FROM ${CountryViews.viewName(c)} ORDER BY CUST_I").collect()
-      val fromDf = CountryViews.countryView(result.warehouse, c,
-        lit("2026-08-12").cast("date")).orderBy("CUST_I").collect()
+      val fromDf = CountryViews.countryView(result.warehouse, c, asOf)
+        .orderBy("CUST_I").collect()
       assert(fromSql.map(_.toSeq).toSeq == fromDf.map(_.toSeq).toSeq, s"country $c")
     }
   }
